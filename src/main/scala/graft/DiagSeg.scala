@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.Dedup
+import graft.ops.{Dedup, TextOps}
 
 /** Stage bisect of the segment-dedup family (round 6): how much of
   * `dedup_segments` / `dedup_seg_rewrite` is the segment-row GENERATION
@@ -22,19 +22,11 @@ object DiagSeg {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val width = 8
     def docs = spark.read.parquet(s"$dir/documents.parquet")
 
-    // the segmentRows expression, inlined (Dedup.segmentRows is private)
-    def segRows = docs
-      .where(col("doc_id").isNotNull && col("text").isNotNull)
-      .select(col("doc_id").as("id"), split(col("text"), " ").as("_w"))
-      .select(col("id"), posexplode(transform(
-        sequence(lit(0), ((size(col("_w")) - 1) / width).cast("int")),
-        i => array_join(slice(col("_w"), i * width + 1, lit(width)), " "))))
-      .toDF("id", "pos", "seg")
+    def segRows = Dedup.segmentRows(docs, "doc_id", "text", width)
 
     def time(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
       mk.write.mode("overwrite").format("noop").save() // warmup
@@ -48,7 +40,7 @@ object DiagSeg {
 
     time("scan_words_only")(docs
       .where(col("doc_id").isNotNull && col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ").as("_w")))
+      .select(col("doc_id"), TextOps.words(col("text")).as("_w")))
     time("seg_rows")(segRows)
     time("seg_rows_md5")(segRows.select(col("id"), md5(col("seg").cast("binary")).as("_h")))
     time("seg_rows_md5_posseg")(segRows.select(col("id"), col("pos"), col("seg"),

@@ -3,7 +3,7 @@ package graft.engine
 import graft.spec.SchemaSpec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** Partition-granularity checkpointed validation runs — the Iceberg-style
   * commit/resume seam (SURVEY.md §7.1).
@@ -12,9 +12,9 @@ import java.nio.file.{Files, Paths}
   * the table's `source`-style column, matching "partition by source" in
   * the north star). Each partition's outputs (violations, verdict,
   * metrics) land under `outDir/<kind>/part=<value>` with an idempotent
-  * overwrite, and a manifest row is committed LAST — a partition
-  * without a manifest row is re-run wholesale on resume, so interrupted
-  * runs resume at partition granularity with no partial-state repair.
+  * overwrite, and a commit-log entry is written LAST — a partition
+  * without an entry is re-run wholesale on resume, so interrupted runs
+  * resume at partition granularity with no partial-state repair.
   */
 /** How a logical partition (= one `partCol` value) is further split into
   * commit units — the "range on doc_id" axis of the north star's
@@ -55,9 +55,10 @@ object SubSplit {
   * drops in without touching the driver loop. Implementations must make
   * [[writeViolations]] an IDEMPOTENT overwrite (a unit interrupted
   * between output and commit is re-run wholesale on resume) and
-  * [[commit]] durable-last (a unit is complete iff its manifest row
-  * exists). Both must be safe to call for DIFFERENT units from
-  * concurrent driver threads (the runner's `concurrency` option).
+  * [[commit]] durable-last and atomic (a unit is complete iff its commit
+  * record exists — for [[ParquetManifestIO]], its [[CommitLog]] entry).
+  * Both must be safe to call for DIFFERENT units from concurrent driver
+  * threads (the runner's `concurrency` option).
   */
 trait TableIO {
   /** Units whose outputs are durably committed. */
@@ -86,45 +87,25 @@ trait TableIO {
       s"${getClass.getName} does not implement writeValid; run without emitValid")
 }
 
-/** Partitioned-Parquet + manifest-directory [[TableIO]]: the in-sandbox
+/** Partitioned-Parquet + [[CommitLog]] [[TableIO]]: the in-sandbox
   * stand-in for an Iceberg checkpoint table (no Iceberg runtime jar
-  * exists here, BASELINE.md). Violations and manifest rows each land
-  * under their own `part=<unitId>` directory with overwrite semantics —
-  * per-unit directories make concurrent commits of different units safe
-  * (no two Spark write jobs ever share an output directory or its
-  * `_temporary` staging) and re-commits idempotent.
+  * exists here, BASELINE.md). Each unit's output is an overwrite of its
+  * own `violations/part=<unitId>` (and `valid/part=<unitId>`) directory,
+  * so concurrent units never share a `_temporary` staging dir. Its
+  * [[CommitLog]] entry `_commits/<unitId>.commit` (`n_rows`, `n_failed`,
+  * `n_violations`, `committed_at`) is the commit: a unit is complete iff
+  * its entry exists. No Spark job commits or lists units. A pre-log
+  * outDir (a `_manifest/` parquet table) has no entries: every unit re-runs.
   */
 final class ParquetManifestIO(spark: SparkSession, outDir: String) extends TableIO {
-  private val manifestDir = s"$outDir/_manifest"
+  private val log = CommitLog.in(outDir)
   private val splitFile = Paths.get(s"$outDir/_manifest_split")
 
-  override def completedUnits(): Set[String] =
-    if (!Files.exists(Paths.get(manifestDir))) Set.empty
-    else {
-      // an outDir from the pre-partitioned manifest layout has parquet
-      // files DIRECTLY under _manifest/ (flat Append commits); partition
-      // discovery over a mix of flat files and part=<id> subdirectories
-      // is undefined, so fail loudly instead of resuming wrong
-      val s = Files.list(Paths.get(manifestDir))
-      val legacyFlat =
-        try s.anyMatch(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      require(!legacyFlat,
-        s"$manifestDir uses the legacy flat manifest layout (parquet files " +
-          "directly under _manifest/); this version commits one " +
-          "part=<unitId> directory per unit — re-run into a fresh outDir")
-      val df = spark.read.option("basePath", manifestDir).parquet(manifestDir)
-      df.select("partition").collect().map(_.getString(0)).toSet
-    }
+  override def completedUnits(): Set[String] = log.ids()
 
-  override def splitDescriptor(): Option[String] =
-    if (Files.exists(splitFile)) Some(Files.readString(splitFile)) else None
+  override def splitDescriptor(): Option[String] = CommitLog.read(splitFile)
 
-  override def writeSplitDescriptor(desc: String): Unit = {
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(splitFile, desc)
-  }
+  override def writeSplitDescriptor(desc: String): Unit = CommitLog.writeAtomic(splitFile, desc)
 
   override def writeViolations(unitId: String, violations: DataFrame): Unit =
     violations.write.mode(SaveMode.Overwrite).parquet(s"$outDir/violations/part=$unitId")
@@ -132,12 +113,10 @@ final class ParquetManifestIO(spark: SparkSession, outDir: String) extends Table
   override def writeValid(unitId: String, rows: DataFrame): Unit =
     rows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/valid/part=$unitId")
 
-  override def commit(res: PartitionResult, at: java.time.Instant): Unit = {
-    import spark.implicits._
-    Seq((res.partition, res.nRows, res.nFailed, res.nViolations, at.toString))
-      .toDF("partition", "n_rows", "n_failed", "n_violations", "committed_at")
-      .write.mode(SaveMode.Overwrite).parquet(s"$manifestDir/part=${res.partition}")
-  }
+  override def commit(res: PartitionResult, at: java.time.Instant): Unit =
+    log.commit(res.partition, Seq("n_rows" -> res.nRows.toString,
+      "n_failed" -> res.nFailed.toString, "n_violations" -> res.nViolations.toString,
+      "committed_at" -> at.toString))
 }
 
 final class CheckpointRunner(spark: SparkSession, io: TableIO) {
@@ -203,9 +182,13 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
       case None => io.writeSplitDescriptor(splitDescriptor(split))
     }
     val done = io.completedUnits()
-    // partition listing: distinct is over the (tiny) partition-key domain
+    // partition listing: distinct is over the (tiny) partition-key domain;
+    // a null key's unit id is "__null__"
+    def idOf(p: Option[String]) = p.getOrElse("__null__")
     val parts = df.select(partCol).distinct().collect()
-      .map(r => Option(r.getString(0)).getOrElse("__null__")).sorted
+      .map(r => Option(r.getString(0))).sortBy(idOf)
+    require(parts.map(idOf).distinct.length == parts.length,
+      s"$partCol holds both null and the literal \"__null__\"; their unit ids would collide")
 
     /** Sub-unit ids and their key-slice predicates for one partition. */
     def subUnits: Seq[(String, Option[org.apache.spark.sql.Column])] = split match {
@@ -225,17 +208,16 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
     }
 
     val units = parts.toSeq.flatMap(p => subUnits.map { case (suffix, pred) =>
-      (s"$p$suffix", p, pred)
+      (s"${idOf(p)}$suffix", p, pred)
     })
     val todo0 = units.filterNot { case (id, _, _) => done(id) }
     val todo = limit.fold(todo0)(todo0.take) // simulated interrupt
 
-    def runUnit(unitId: String, p: String,
+    def runUnit(unitId: String, p: Option[String],
         pred: Option[org.apache.spark.sql.Column]): PartitionResult = {
-      val partSlice =
-        if (p == "__null__") df.where(col(partCol).isNull)
-        else df.where(col(partCol) === p) // partition pruning when the
-                                          // source layout is partitioned
+      val partSlice = p.fold(df.where(col(partCol).isNull))(v =>
+        df.where(col(partCol) === v)) // partition pruning when the
+                                      // source layout is partitioned
       val slice0 = pred.fold(partSlice)(partSlice.where)
       // emitValid runs the WHOLE unit over the defaults-applied rows
       // (parse-with-defaults then validate — the reference's order)
@@ -274,7 +256,7 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
       val res = PartitionResult(unitId, m("n_rows").asInstanceOf[Long],
         m("n_failed").asInstanceOf[Long], m("n_violations").asInstanceOf[Long])
 
-      // commit point: manifest row written only after outputs are durable
+      // commit point: the log entry is written only after outputs are durable
       io.commit(res, java.time.Instant.now())
       res
     }
@@ -286,11 +268,21 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      // after a failure no further unit starts (the resume runs them), and
+      // every unit already running settles before run rethrows the first
+      // failure in unit order, so no commit lands after run has thrown
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
       try {
         val futures = todo.map { case (unitId, p, pred) =>
-          Future(runUnit(unitId, p, pred))
+          Future {
+            if (failed.get) None
+            else try Some(runUnit(unitId, p, pred))
+            catch { case e: Throwable => failed.set(true); throw e }
+          }
         }
-        futures.map(Await.result(_, Duration.Inf))
+        val settled = futures.map(f => Await.ready(f, Duration.Inf).value.get)
+        settled.collectFirst { case scala.util.Failure(e) => throw e }
+        settled.flatMap(_.get)
       } finally pool.shutdown()
     }
   }

@@ -54,6 +54,8 @@ trait StageIO {
   * layout discipline: stage data under `dir/stage=<name>`, manifest
   * rows under `dir/_stages/part=<name>` (per-stage directories make
   * re-commits idempotent and never share a `_temporary` staging dir).
+  * The run descriptor `dir/_run_descriptor` is written atomically
+  * ([[CommitLog.writeAtomic]]).
   */
 final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO {
   private val manifestDir = s"$dir/_stages"
@@ -64,13 +66,9 @@ final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO
     else spark.read.option("basePath", manifestDir).parquet(manifestDir)
       .select("stage").distinct().collect().map(_.getString(0)).toSet
 
-  override def runDescriptor(): Option[String] =
-    if (Files.exists(descFile)) Some(Files.readString(descFile)) else None
+  override def runDescriptor(): Option[String] = CommitLog.read(descFile)
 
-  override def writeRunDescriptor(desc: String): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(descFile, desc)
-  }
+  override def writeRunDescriptor(desc: String): Unit = CommitLog.writeAtomic(descFile, desc)
 
   override def writeStage(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/stage=$name")

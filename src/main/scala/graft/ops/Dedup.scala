@@ -908,7 +908,7 @@ object Dedup {
     * has no first-occurrence identity, and engines order SQL NULLs
     * differently, so keeping them would be oracle-fragile).
     */
-  private def segmentRows(df: DataFrame, keyCol: String, textCol: String,
+  private[graft] def segmentRows(df: DataFrame, keyCol: String, textCol: String,
       width: Int): DataFrame = {
     require(width > 0, s"segment width must be positive, got $width")
     df.where(col(keyCol).isNotNull && col(textCol).isNotNull)

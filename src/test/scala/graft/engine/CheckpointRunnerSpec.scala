@@ -5,6 +5,7 @@ import graft.gen.SequenceGen
 import graft.spec.SchemaParser
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.reflect.io.Directory
 
 /** Partition-granularity checkpoint/resume — the north-rule requirement:
   * a simulated interrupt (`limit`) commits a prefix of partitions;
@@ -102,17 +103,27 @@ class CheckpointRunnerSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(spark.read.option("basePath", s"$out/valid").parquet(s"$out/valid").count() == 3L)
   }
 
-  test("legacy flat manifest layout is rejected with a clear message, not misread") {
-    val out = Files.createTempDirectory("graft_ckpt_legacy").toString
-    // simulate a pre-partitioned-layout outDir: manifest rows appended as
-    // flat parquet files directly under _manifest/
+  test("an outDir with a pre-log _manifest/ re-runs every unit") {
+    val df = SequenceGen.generate(spark, 2000)
+    val fresh = new CheckpointRunner(spark,
+      Files.createTempDirectory("graft_ckpt_fresh").toString)
+      .run(df, spec, "doc_id", "source")
+    // a pre-log outDir: same split descriptor and outputs, but its commits
+    // are parquet manifest rows (flat and per-unit) that the log never reads
+    val out = Files.createTempDirectory("graft_ckpt_prelog").toString
+    new CheckpointRunner(spark, out).run(df, spec, "doc_id", "source")
+    val before = violationSet(s"$out/violations")
+    new Directory(CommitLog.in(out).dir.toFile).deleteRecursively()
     import spark.implicits._
-    Seq(("src0", 10L, 0L, 0L, "t"))
+    val rows = fresh.map(r => (r.partition, r.nRows, r.nFailed, r.nViolations, "t"))
       .toDF("partition", "n_rows", "n_failed", "n_violations", "committed_at")
-      .write.mode("append").parquet(s"$out/_manifest")
+    rows.write.parquet(s"$out/_manifest")
+    rows.write.parquet(s"$out/_manifest/part=${fresh.head.partition}")
+
     val runner = new CheckpointRunner(spark, out)
-    val ex = intercept[IllegalArgumentException] { runner.completedPartitions() }
-    assert(ex.getMessage.contains("fresh outDir"), ex.getMessage)
+    assert(runner.completedPartitions().isEmpty)
+    assert(runner.run(df, spec, "doc_id", "source") == fresh)
+    assert(violationSet(s"$out/violations") == before)
   }
 
   test("bucket sub-split: finer commit units, resume mid-source, totals match unsplit run") {
@@ -236,10 +247,9 @@ class CheckpointRunnerSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val p = a.head.partition
     assert(violationSet(s"$outA/violations/part=$p") == violationSet(s"$outB/violations/part=$p"))
 
-    // overwrite semantics: wiping the manifest and re-running the same
-    // partition into the SAME directory leaves identical outputs
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(s"$outA/_manifest")).deleteRecursively()
+    // overwrite semantics: deleting the unit's log entry and re-running
+    // the same partition into the SAME directory leaves identical outputs
+    Files.delete(CommitLog.in(outA).entryPath(p))
     val before = violationSet(s"$outA/violations/part=$p")
     val again = new CheckpointRunner(spark, outA).run(df, spec, "doc_id", "source", limit = Some(1))
     assert(again == a)
@@ -274,5 +284,101 @@ class CheckpointRunnerSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
     // every constraint that fails somewhere still has at least one exemplar
     assert(capV.keySet == fullV.keySet)
+  }
+
+  /** `k`-keyed rows in each of `sources`, `perSource` apiece; every third
+    * row breaks [[smallSpec]]'s minimum. */
+  private def smallTable(sources: Seq[String], perSource: Int) = {
+    import spark.implicits._
+    sources.flatMap(s => (0 until perSource).map(i => (s"$s#$i", (i % 3).toLong * 5, s)))
+      .toDF("k", "a", "src").repartition(4)
+  }
+  private lazy val smallSpec = SchemaParser.parse(
+    """{"type": "object", "properties": {
+      "k": {"type": "string", "required": true},
+      "a": {"type": "integer", "required": true, "minimum": 3},
+      "src": {"type": "string", "required": true}}}""")
+
+  test("a failing concurrent unit: nothing commits after run throws") {
+    val sources = (0 until 6).map(i => s"s$i")
+    val df = smallTable(sources, 50)
+    val out = Files.createTempDirectory("graft_ckpt_fail").toString
+    // s0 fails at once while s1 and s2 are still running
+    final class FailingIO(inner: TableIO) extends TableIO {
+      val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      override def completedUnits(): Set[String] = inner.completedUnits()
+      override def splitDescriptor(): Option[String] = inner.splitDescriptor()
+      override def writeSplitDescriptor(desc: String): Unit = inner.writeSplitDescriptor(desc)
+      override def writeViolations(unitId: String, v: org.apache.spark.sql.DataFrame): Unit = {
+        started.add(unitId)
+        if (unitId == "s0") throw new RuntimeException("injected write failure")
+        inner.writeViolations(unitId, v)
+      }
+      override def commit(res: PartitionResult, at: java.time.Instant): Unit =
+        inner.commit(res, at)
+    }
+    val io = new FailingIO(new ParquetManifestIO(spark, out))
+    val e = intercept[RuntimeException] {
+      new CheckpointRunner(spark, io).run(df, smallSpec, "k", "src", concurrency = 3)
+    }
+    assert(e.getMessage == "injected write failure")
+    import scala.jdk.CollectionConverters._
+    val started = io.started.asScala.toSet
+    // every unit that started, except the failed one, committed before run threw
+    val committed = io.completedUnits()
+    assert(committed == started - "s0")
+    Thread.sleep(1000)
+    assert(io.completedUnits() == committed && io.started.asScala.toSet == started,
+      "a unit ran or committed after run threw")
+
+    val resumed = new CheckpointRunner(spark, out).run(df, smallSpec, "k", "src", concurrency = 3)
+    assert(resumed.map(_.partition).toSet == sources.toSet -- started + "s0",
+      "resume runs exactly the failed unit and the units that never started")
+    val all = new CheckpointRunner(spark,
+      Files.createTempDirectory("graft_ckpt_nofail").toString)
+      .run(df, smallSpec, "k", "src")
+    assert(io.completedUnits() == sources.toSet)
+    assert((all.filter(r => committed(r.partition)) ++ resumed).sortBy(_.partition) == all)
+  }
+
+  test("crash leftovers: a temp entry and an uncommitted output re-run") {
+    val df = SequenceGen.generate(spark, 4000)
+    val out = Files.createTempDirectory("graft_ckpt_crash").toString
+    val full = new CheckpointRunner(spark, out)
+      .run(df, spec, "doc_id", "source", concurrency = 2)
+    val want = violationSet(s"$out/violations")
+    val Seq(a, b, c) = full.map(_.partition).take(3)
+    val log = CommitLog.in(out)
+    // a's commit crashed before its rename: only the temp entry exists
+    Files.move(log.entryPath(a), CommitLog.tempPath(log.entryPath(a)))
+    // b's output was written but never committed, and holds stale rows
+    Files.delete(log.entryPath(b))
+    spark.read.parquet(s"$out/violations/part=$c")
+      .write.mode("overwrite").parquet(s"$out/violations/part=$b")
+
+    val runner = new CheckpointRunner(spark, out)
+    assert(runner.completedPartitions() == full.map(_.partition).toSet - a - b)
+    val resumed = runner.run(df, spec, "doc_id", "source", concurrency = 2)
+    assert(resumed.map(_.partition) == Seq(a, b))
+    assert((full.filter(r => r.partition != a && r.partition != b) ++ resumed)
+      .sortBy(_.partition) == full)
+    assert(violationSet(s"$out/violations") == want)
+    assert(runner.run(df, spec, "doc_id", "source").isEmpty)
+  }
+
+  test("unit ids round-trip through the commit log exactly") {
+    val sources = Seq("src 0", "é", "a=b", "50%", "__null__", "x.tmp", "_manifest_split")
+    val df = smallTable(sources, 6)
+    val out = Files.createTempDirectory("graft_ckpt_ids").toString
+    val runner = new CheckpointRunner(spark, out)
+    val first = runner.run(df, smallSpec, "k", "src", limit = Some(3))
+    assert(runner.completedPartitions() == first.map(_.partition).toSet)
+    val second = runner.run(df, smallSpec, "k", "src")
+    assert((first ++ second).map(_.partition).sorted == sources.sorted)
+    // a literal "__null__" source is its own slice, not the null one
+    assert((first ++ second).forall(r => r.nRows == 6L && r.nFailed == 2L))
+    assert(runner.completedPartitions() == sources.toSet)
+    assert(Files.readString(CommitLog.in(out).entryPath("a=b")).linesIterator.contains("n_rows=6"))
+    assert(runner.run(df, smallSpec, "k", "src").isEmpty)
   }
 }
